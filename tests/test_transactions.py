@@ -3,6 +3,9 @@ atomic commit point — all tables or none, across crashes."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -98,7 +101,26 @@ def test_txn_then_plain_writes_interleave(spark, lake_and_frames):
     assert lake.read(spark, "silver", "audit_log").count() == 2
 
 
-def test_txn_delete_where_forward_derives_buckets(spark, tmp_path):
+def _txn_delete(lake, *args, **kwargs):
+    with lake.transaction() as txn:
+        return txn.delete_where(*args, **kwargs)
+
+
+def _lake_delete(lake, *args, **kwargs):
+    return lake.delete_where(*args, **kwargs)
+
+
+# both DELETE entry points stage through the same Lakehouse method, so
+# the partition-discovery cases run against each
+delete_entry_points = pytest.mark.parametrize(
+    "delete_where", [_txn_delete, _lake_delete], ids=["txn", "lake"]
+)
+
+
+@delete_entry_points
+def test_txn_delete_where_forward_derives_buckets(
+    spark, tmp_path, delete_where
+):
     """predicates on a hidden bucket spec's SOURCE column derive the
     affected partitions through the transform — no discovery scan —
     and the staged delete equals the condition path."""
@@ -116,14 +138,12 @@ def test_txn_delete_where_forward_derives_buckets(spark, tmp_path):
             spark.range(200).select("id", (F.col("id") * 3).alias("v")),
             "silver", t,
         )
-    with lake.transaction() as txn:
-        assert txn.delete_where(
-            spark, "silver", "a", predicates=[("id", "in", [7, 63])]
-        )
-    with lake.transaction() as txn:
-        assert txn.delete_where(
-            spark, "silver", "b", F.col("id").isin([7, 63])
-        )
+    assert delete_where(
+        lake, spark, "silver", "a", predicates=[("id", "in", [7, 63])]
+    )
+    assert delete_where(
+        lake, spark, "silver", "b", F.col("id").isin([7, 63])
+    )
     rows = lambda t: sorted(  # noqa: E731
         tuple(r) for r in lake.read(spark, "silver", t).collect()
     )
@@ -131,15 +151,15 @@ def test_txn_delete_where_forward_derives_buckets(spark, tmp_path):
     assert len(rows("a")) == 198
     # ids absent from the table: no commit, no version churn
     v = len(lake.snapshots("silver", "a"))
-    with lake.transaction() as txn:
-        assert not txn.delete_where(
-            spark, "silver", "a", predicates=[("id", "=", 99_999)]
-        )
+    assert not delete_where(
+        lake, spark, "silver", "a", predicates=[("id", "=", 99_999)]
+    )
     assert len(lake.snapshots("silver", "a")) == v
 
 
+@delete_entry_points
 def test_txn_delete_where_predicates_reaches_appended_rows(
-    spark, tmp_path
+    spark, tmp_path, delete_where
 ):
     """Forward-derived bucket discovery must count buckets living only
     in ADDITIVE (append) dirs as live — an appended row's bucket may
@@ -165,11 +185,10 @@ def test_txn_delete_where_predicates_reaches_appended_rows(
         ),
         "silver", "t",
     )
-    with lake.transaction() as txn:
-        assert txn.delete_where(
-            spark, "silver", "t",
-            predicates=[("id", "in", [5_003, 5_011])],
-        )
+    assert delete_where(
+        lake, spark, "silver", "t",
+        predicates=[("id", "in", [5_003, 5_011])],
+    )
     ids = sorted(
         r["id"] for r in lake.read(spark, "silver", "t").collect()
     )
@@ -177,8 +196,9 @@ def test_txn_delete_where_predicates_reaches_appended_rows(
     assert len(ids) == 28
 
 
+@delete_entry_points
 def test_txn_probe_discovery_handles_null_and_escaped_tokens(
-    spark, tmp_path
+    spark, tmp_path, delete_where
 ):
     """The r11 probe branch (predicates on a NON-source column of a
     hidden-partitioned table) must canonicalize the partition tokens
@@ -196,16 +216,63 @@ def test_txn_probe_discovery_handles_null_and_escaped_tokens(
         "id long, k string, v long",
     )
     lake.overwrite_partitions(df, "silver", "t")
-    with lake.transaction() as txn:
-        # id is NOT the spec source → probe-discovery branch
-        assert txn.delete_where(
-            spark, "silver", "t", predicates=[("id", "in", [1, 2])]
-        )
+    # id is NOT the spec source → probe-discovery branch
+    assert delete_where(
+        lake, spark, "silver", "t", predicates=[("id", "in", [1, 2])]
+    )
     got = sorted(
         (r["id"], r["k"], r["v"])
         for r in lake.read(spark, "silver", "t").collect()
     )
     assert got == [(3, "plain", 30)]
+
+
+@pytest.mark.parametrize("mode", ["copy_on_write", "merge_on_read"])
+def test_single_table_writes_stay_off_the_journal(spark, tmp_path, mode):
+    """Single-table writes commit one table-log line each: no journal
+    line, no txn_id, and a `v<version>-` data directory.  A one-table
+    transaction still commits through exactly one journal line."""
+    lake = Lakehouse(str(tmp_path / "lake"))
+    lake.create_schemas("silver")
+    ddl = "id long, p string, v double"
+    lake.overwrite_partitions(
+        spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], ddl),
+        "silver", "t", partition_col="p",
+    )
+    lake.append(
+        spark.createDataFrame([(3, "b", 3.0)], ddl), "silver", "t"
+    )
+    lake.merge_into(
+        spark, "silver", "t",
+        spark.createDataFrame([(2, "b", 20.0), (4, "a", 4.0)], ddl),
+        "id", partition_col="p", mode=mode,
+    )
+    assert lake.delete_where(
+        spark, "silver", "t", F.col("id") == 1, partition_col="p",
+        mode=mode,
+    )
+    journal = tmp_path / "lake" / "_txns.jsonl"
+    assert not journal.exists()
+    log = lake.snapshots("silver", "t")
+    assert len(log) == 4
+    for e in log:
+        assert "txn_id" not in e
+        for key in ("data_dir", "dv_dir"):
+            if key in e:
+                assert os.path.basename(e[key]).startswith(
+                    f"v{e['version']}-"
+                )
+    assert sorted(
+        (r["id"], r["v"]) for r in lake.read(spark, "silver", "t").collect()
+    ) == [(2, 20.0), (3, 3.0), (4, 4.0)]
+
+    with lake.transaction() as txn:
+        txn.append(spark.createDataFrame([(5, "a", 5.0)], ddl), "silver", "t")
+    lines = [json.loads(x) for x in journal.read_text().splitlines()]
+    assert len(lines) == 1
+    last = lake.snapshots("silver", "t")[-1]
+    assert last["txn_id"] == lines[0]["txn_id"]
+    assert os.path.basename(last["data_dir"]) == f"t{last['txn_id']}"
 
 
 def test_txn_mor_delete_conflicts_with_interleaved_compact(

@@ -417,17 +417,6 @@ def compound_key_join(orders: DataFrame) -> DataFrame:
     )
 
 
-def cross_join_bridge(region: DataFrame, orders: DataFrame) -> DataFrame:
-    """J5: deliberate small×small cross join (zone × holiday dense bridge,
-    mobility_ingestion_pipeline.py:345-347)."""
-    priorities = orders.select("o_orderpriority").distinct()
-    return (
-        region.crossJoin(priorities)
-        .select("r_name", "o_orderpriority")
-        .orderBy("r_name", "o_orderpriority")
-    )
-
-
 def anti_join_orphans(customer: DataFrame, orders: DataFrame) -> DataFrame:
     """J6: left-anti referential-integrity check (orphan audit,
     1_sprint3...ipynb:4003 cell 53).  Scale: broadcast the distinct key
@@ -543,26 +532,6 @@ def filter_suite(part: DataFrame) -> DataFrame:
         )
         .filter(F.col("fee") > 10.0)
         .orderBy("p_partkey")
-    )
-
-
-def between_and_in(orders: DataFrame) -> DataFrame:
-    """P5 BETWEEN on dates + P6 IN-list, aggregated (the consultation
-    DAG's date-range filters, mobility_consultations.py:52,65)."""
-    return (
-        orders.filter(
-            F.col("o_orderdate").between(
-                F.lit("1996-01-01").cast("timestamp"),
-                F.lit("1997-12-31").cast("timestamp"),
-            )
-            & F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-        )
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(dsum("o_totalprice"), 2).alias("total_price"),
-        )
-        .orderBy("o_orderpriority")
     )
 
 

@@ -12,6 +12,9 @@ into:
     replaceWhere / DELETE+INSERT analog,
     mobility_ingestion_pipeline.py:519-533,544-567)
   - `append` — append-only sinks (the quality log)
+  - row-level DML — `merge_into`, `delete_where`, `update_where`, each
+    copy-on-write (partition rewrite) or merge-on-read (deletion
+    vector)
   - **multi-table transactions** (`transaction()`) — the DuckLake
     cross-table txn surface: all staged writes commit atomically via
     ONE appended line in a lakehouse-level journal; per-table logs
@@ -37,6 +40,14 @@ reclaims them.  Commits are optimistic-concurrency-checked
 overlapping writers must re-read and retry — the reference's
 8-parallel-day-writer cloud mode (docs/report/main.tex:260) without
 its shared-catalog Postgres.
+
+Every mutation is staged ONCE, by a `Lakehouse._stage_*` method that
+writes data and deletion-vector files into the directory it is handed
+and returns the log entry.  Two front-ends commit it: the single-table
+`Lakehouse` methods (`_data/v<version>-<id>`, one table-log line via
+`_commit`, never the journal) and `Transaction` (`_data/t<txn_id>`,
+one journal line via `_commit_journal`), through one conflict scan
+(`_check_conflicts`).
 
 Scale notes: partition granularity is the reference's own (one DATE
 per partition ≈ 10M rows/day at production scale — healthy parquet
@@ -107,6 +118,14 @@ class ManifestExportError(Exception):
     export succeeds."""
 
 
+def _read_jsonl(path: str) -> list[dict]:
+    """Every line of a JSONL log (a table log or the journal)."""
+    if not os.path.exists(path):
+        return []
+    with open(path) as f:
+        return [json.loads(line) for line in f if line.strip()]
+
+
 def _dir_age_seconds(path: str, now_ns: int) -> float:
     """Age of a staging directory, preferring the `time_ns` its name
     embeds (`v{version}-{time_ns:x}-{pid:x}`, `_next_data_dir`) over
@@ -164,6 +183,22 @@ def _commits_conflict(mine: dict, other: dict) -> bool:
     )
 
 
+def _check_conflicts(
+    entry: dict, landed: list[dict], base: int, who: str, retry: str
+) -> None:
+    """The optimistic-concurrency scan both commit front-ends share
+    (`Lakehouse._commit`, `Transaction._commit_journal`): raise
+    `ConcurrentWriteError` on the first log line that landed after the
+    writer's `base` version and does not commute with `entry`."""
+    for other in landed:
+        if _commits_conflict(entry, other):
+            raise ConcurrentWriteError(
+                f"{who} {entry['op']!r} based on version {base} "
+                f"conflicts with interleaved version {other['version']} "
+                f"({other['operation']!r}); {retry}"
+            )
+
+
 # Hive's NULL-partition directory name.  For tables created at format
 # v2 (see Lakehouse.null_token) it is ALSO the catalog's canonical
 # NULL partition token, which retires the NULL/'None' identity
@@ -193,24 +228,29 @@ def _token_of(value, null_token: str = "None") -> str:
     return null_token if value is None else str(value)
 
 
-def _pvalue_subdirs(
-    d: str, pcol: str, values, null_token: str = "None"
-) -> list[str]:
-    """Existing `<pcol>=<raw>` subdirectories of `d` whose CANONICAL
-    token is in `values` — one listdir, escaped and NULL-sentinel
-    names matched correctly (see `_canon_token`)."""
+def _raw_tokens(d: str, pcol: str) -> list[str]:
+    """RAW tokens of the `<pcol>=<raw>` subdirectories of `d` (one
+    listdir, sorted; [] when `d` is missing)."""
     pfx = f"{pcol}="
-    want = set(values)
     try:
         names = os.listdir(d)
     except OSError:
         return []
+    return [n[len(pfx):] for n in sorted(names) if n.startswith(pfx)]
+
+
+def _pvalue_subdirs(
+    d: str, pcol: str, values, null_token: str = "None"
+) -> list[str]:
+    """Existing `<pcol>=<raw>` subdirectories of `d` whose CANONICAL
+    token is in `values` — escaped and NULL-sentinel names matched
+    correctly (see `_canon_token`)."""
+    want = set(values)
     return [
         p
-        for n in sorted(names)
-        if n.startswith(pfx)
-        and _canon_token(n[len(pfx):], null_token) in want
-        and os.path.isdir(p := os.path.join(d, n))
+        for t in _raw_tokens(d, pcol)
+        if _canon_token(t, null_token) in want
+        and os.path.isdir(p := os.path.join(d, f"{pcol}={t}"))
     ]
 
 
@@ -355,10 +395,7 @@ class Lakehouse:
             payload: dict = {"null_token": NULL_SENTINEL}
             if guard is not None:
                 payload["migrated_at_version"] = guard
-            tmp = os.path.join(path, self.FORMAT_FILE + ".tmp")
-            with open(tmp, "w") as f:
-                json.dump(payload, f)
-            os.replace(tmp, os.path.join(path, self.FORMAT_FILE))
+            self._write_format(path, payload)
 
         entries = self.snapshots(schema, name)
         if not entries:
@@ -457,23 +494,31 @@ class Lakehouse:
         if os.path.exists(p):
             return
         with self._table_lock(path):
-            if os.path.exists(p) or self._raw_snapshots(schema, name):
-                return
-            tmp = p + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"null_token": NULL_SENTINEL}, f)
-            os.replace(tmp, p)
+            if not (os.path.exists(p) or self._raw_snapshots(schema, name)):
+                self._write_format(path, {"null_token": NULL_SENTINEL})
 
-    def _next_data_dir(self, schema: str, name: str) -> tuple[int, str]:
-        """(base version, unique staging dir).  The dir name embeds a
-        writer-unique suffix so concurrent stagers never clobber each
-        other's files; which staged dir becomes live is decided later,
-        at the serialized log append (`_commit`)."""
+    def _write_format(self, path: str, payload: dict) -> None:
+        """Atomically (tmp + rename) replace the table's format file."""
+        p = os.path.join(path, self.FORMAT_FILE)
+        with open(p + ".tmp", "w") as f:
+            json.dump(payload, f)
+        os.replace(p + ".tmp", p)
+
+    def _next_data_dir(
+        self, schema: str, name: str, dirname: str | None = None
+    ) -> tuple[int, str]:
+        """(base version, unique staging dir) — taken by every write
+        BEFORE it reads the table.  The default dir name
+        `v<version>-<time_ns>-<pid>` embeds a writer-unique suffix so
+        concurrent stagers never clobber each other's files; which
+        staged dir becomes live is decided later, at the serialized
+        log append (`_commit`).  A transaction passes `t<txn_id>`."""
         self._ensure_format(schema, name)
         version = len(self.snapshots(schema, name))
-        uniq = f"{time.time_ns():x}-{os.getpid():x}"
+        if dirname is None:
+            dirname = f"v{version}-{time.time_ns():x}-{os.getpid():x}"
         return version, os.path.join(
-            self._table_dir(schema, name), "_data", f"v{version}-{uniq}"
+            self._table_dir(schema, name), "_data", dirname
         )
 
     def _commit(
@@ -500,22 +545,19 @@ class Lakehouse:
         exactly like a crashed write — vacuum reclaims it."""
         path = self._table_dir(schema, name)
         with self._table_lock(path):
+            log = self._raw_snapshots(schema, name)  # one parse per commit
             if unique_meta:
                 mine = {k: entry.get(k) for k in unique_meta}
-                for other in self._raw_snapshots(schema, name):
-                    if all(
-                        other.get(k) == v for k, v in mine.items()
-                    ):
-                        return False  # duplicate: already committed
-            for other in self._raw_snapshots(schema, name)[base_version:]:
-                if _commits_conflict(entry, other):
-                    raise ConcurrentWriteError(
-                        f"{schema}.{name}: commit of {entry['op']!r} based "
-                        f"on version {base_version} conflicts with "
-                        f"interleaved version {other['version']} "
-                        f"({other['operation']!r}); re-read and retry"
-                    )
-            self._append_log_line(path, **entry)
+                if any(
+                    all(other.get(k) == v for k, v in mine.items())
+                    for other in log
+                ):
+                    return False  # duplicate: already committed
+            _check_conflicts(
+                entry, log[base_version:], base_version,
+                f"{schema}.{name}: commit of", "re-read and retry",
+            )
+            self._append_log_line(path, log, **entry)
         return True
 
     # -- CHECK constraints (Delta ALTER TABLE ADD CONSTRAINT analog) -------
@@ -970,12 +1012,16 @@ class Lakehouse:
         partition_col: str | None,
     ) -> tuple[DataFrame, str]:
         """(df, physical partition column).  Explicit `partition_col`
-        wins (internal rewrites pass the hidden column through); with
-        None, a hidden spec derives its value column — recomputed even
-        if present, so a stale caller-supplied value can never
-        disagree with the transform."""
+        wins (internal rewrites pass the hidden column through, which
+        is re-derived onto a frame that lacks it); with None, a hidden
+        spec derives its value column — recomputed even if present, so
+        a stale caller-supplied value can never disagree with the
+        transform."""
         if partition_col is not None:
-            return df, partition_col
+            return (
+                self._ensure_partition_col(df, schema, name, partition_col),
+                partition_col,
+            )
         spec = self.partition_spec(schema, name)
         if spec is None:
             raise ValueError(
@@ -1123,14 +1169,16 @@ class Lakehouse:
         return entry
 
     @staticmethod
-    def _cluster_for_partitioned_write(
+    def _write_partitioned(
         df: DataFrame,
         partition_col: str,
+        data_dir: str,
         files_per_partition: int = 1,
         sort_within: tuple[str, ...] = (),
-    ) -> DataFrame:
-        """The one-writer-per-partition rule, in ONE place (the write
-        paths and compact all follow it): hash-repartition on the
+    ) -> None:
+        """Write `df` partitioned by `partition_col` under the
+        one-writer-per-partition rule, in ONE place (the write paths
+        and compact all follow it): hash-repartition on the
         partition column so every value's rows land in one task →
         exactly one file per partition directory per commit.  The
         unpartitioned form multiplies files by the upstream task count
@@ -1172,84 +1220,62 @@ class Lakehouse:
             out = df.repartition(F.col(partition_col))
         if sort_within:
             out = out.sortWithinPartitions(partition_col, *sort_within)
-        return out
+        out.write.mode("overwrite").partitionBy(partition_col).parquet(
+            data_dir
+        )
 
     def _stage_overwrite_partitions(
         self, df: DataFrame, schema: str, name: str,
-        partition_col: str, data_dir: str,
+        partition_col: str | None, data_dir: str,
         partitions: list[str] | None = None,
         files_per_partition: int = 1,
         sort_within: tuple[str, ...] = (),
     ) -> dict:
         path = self._table_dir(schema, name)
+        df, partition_col = self._resolve_partitioning(
+            df, schema, name, partition_col
+        )
         self._enforce_constraints(df, schema, name)
         df = self._to_physical(df, schema, name)
-        (
-            self._cluster_for_partitioned_write(
-                df, partition_col, files_per_partition, sort_within
-            )
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(data_dir)
+        self._write_partitioned(
+            df, partition_col, data_dir, files_per_partition, sort_within
         )
+        # the partition set comes off the directory names the write
+        # just produced — a distinct().collect() would recompute the
+        # df's ENTIRE lineage a second time per commit (hive escaping
+        # unquoted, a no-op for the plain scalar values this catalog
+        # supports).  A NULL partition value writes the sentinel
+        # directory __HIVE_DEFAULT_PARTITION__.  On format-v2 tables
+        # (every table this code creates) the sentinel IS the
+        # canonical NULL token, so it stays as-is and a literal string
+        # 'None' is just an ordinary value — two distinct partition
+        # identities, nothing to guard.
+        #
+        # LEGACY tables (no format file) keep the documented token
+        # 'None' (str(None)), where a literal string value 'None'
+        # SHARES partition identity with NULL — so the ambiguous mix
+        # is refused loudly instead of silently merging identities
+        # downstream: both when one write produces both directory
+        # forms, and (the cross-commit case) when the incoming write
+        # carries one form while the table's live directories already
+        # hold the other.  Explicit `partitions` (DELETE/UPDATE
+        # rewrites, direct callers) are CANONICAL — on a legacy table
+        # NULL and literal-'None' both arrive as 'None' — so the guard
+        # reads the physical forms off the same directory names.
+        from urllib.parse import unquote
+
+        raw = _raw_tokens(data_dir, partition_col)
+        legacy = self.null_token(schema, name) == "None"
+        if legacy:
+            self._guard_legacy_null_mix(
+                schema, name, partition_col,
+                {t for t in ("None", NULL_SENTINEL) if t in raw},
+            )
         if partitions is not None:
             parts = [str(p) for p in partitions]
-            # r13 (ADVICE): the legacy NULL/'None' mix guard must also
-            # cover explicit-partitions writes (delete_where/update
-            # rewrites, direct callers).  The caller's tokens are
-            # CANONICAL — on a legacy table NULL and literal-'None'
-            # both arrive as 'None' — so the two physical forms are
-            # recovered from the directory names partitionBy just
-            # produced, exactly as the directory-derived branch does.
-            if self.null_token(schema, name) == "None":
-                prefix = f"{partition_col}="
-                raw = {
-                    d[len(prefix):]
-                    for d in os.listdir(data_dir)
-                    if d.startswith(prefix)
-                    and os.path.isdir(os.path.join(data_dir, d))
-                }
-                self._guard_legacy_null_mix(
-                    schema, name, partition_col,
-                    {t for t in ("None", NULL_SENTINEL) if t in raw},
-                )
         else:
-            # read the partition set off the directory names the write
-            # just produced — the old distinct().collect() recomputed
-            # the df's ENTIRE lineage a second time per commit (hive
-            # escaping unquoted, a no-op for the plain scalar values
-            # this catalog supports)
-            from urllib.parse import unquote
-
-            prefix = f"{partition_col}="
-            parts = [
-                unquote(d[len(prefix):])
-                for d in os.listdir(data_dir)
-                if d.startswith(prefix)
-                and os.path.isdir(os.path.join(data_dir, d))
-            ]
-            # a NULL partition value writes the sentinel directory
-            # __HIVE_DEFAULT_PARTITION__.  On format-v2 tables (every
-            # table this code creates) the sentinel IS the canonical
-            # NULL token, so it stays as-is and a literal string
-            # 'None' is just an ordinary value — two distinct
-            # partition identities, nothing to guard.
-            #
-            # LEGACY tables (no format file) keep the documented token
-            # 'None' (str(None), what the old distinct().collect()
-            # path recorded), where a literal string value 'None'
-            # SHARES partition identity with NULL — so the ambiguous
-            # mix is refused loudly instead of silently merging
-            # identities downstream: both when one write produces both
-            # directory forms, and (r12, the cross-commit case) when
-            # the incoming write carries one form while the table's
-            # live directories already hold the other.
-            nt = self.null_token(schema, name)
-            if nt == "None":
-                self._guard_legacy_null_mix(
-                    schema, name, partition_col,
-                    {p for p in parts if p in ("None", NULL_SENTINEL)},
-                )
+            parts = [unquote(t) for t in raw]
+            if legacy:
                 parts = [
                     "None" if p == NULL_SENTINEL else p for p in parts
                 ]
@@ -1320,18 +1346,7 @@ class Lakehouse:
         path)."""
         part_map, extra, _dvs = self._manifest(schema, name)
         dirs = {d for d, pc in part_map.values() if pc == pcol}
-        dirs |= set(extra)
-        pfx = f"{pcol}="
-        out: set[str] = set()
-        for d in dirs:
-            try:
-                names = os.listdir(d)
-            except OSError:
-                continue
-            out.update(
-                n[len(pfx):] for n in names if n.startswith(pfx)
-            )
-        return out
+        return {t for d in dirs | set(extra) for t in _raw_tokens(d, pcol)}
 
     def _stage_full_write(
         self, df: DataFrame, schema: str, name: str, op: str, data_dir: str
@@ -1344,16 +1359,12 @@ class Lakehouse:
             # hidden-spec tables lay out even full writes / appends by
             # the derived value, so `read_where` can DIRECTORY-prune
             # additive commit dirs too (the streaming-append shape).
-            # One writer per derived value
-            # (_cluster_for_partitioned_write owns the rule).
-            (
-                self._cluster_for_partitioned_write(
-                    df.withColumn(spec.hidden_col, spec.derive(df)),
-                    spec.hidden_col,
-                )
-                .write.mode("overwrite")
-                .partitionBy(spec.hidden_col)
-                .parquet(data_dir)
+            # One writer per derived value (_write_partitioned owns
+            # the rule).
+            self._write_partitioned(
+                df.withColumn(spec.hidden_col, spec.derive(df)),
+                spec.hidden_col,
+                data_dir,
             )
         else:
             df.write.mode("overwrite").parquet(data_dir)
@@ -1399,21 +1410,16 @@ class Lakehouse:
 
         `files_per_partition` / `sort_within`: layout knobs forwarded
         to the one-writer-per-partition rule
-        (`_cluster_for_partitioned_write`) — the escape hatch for
+        (`_write_partitioned`) — the escape hatch for
         partitions too big for one writer, and the way to keep
         caller-side clustering alive for file-stat/Bloom pruning.
 
-        `_base`: internal — read-modify-write callers (merge_into,
-        delete_where) pass the version count they captured BEFORE
-        reading the table, so a commit that lands between their read
-        and this commit is conflict-checked rather than silently based
-        on stale state (the TOCTOU window the randomized mixed-op
-        schedule test caught: an interleaved commit with a version
-        BELOW the commit-time base escapes the `[base:]` conflict
-        scan)."""
-        df, partition_col = self._resolve_partitioning(
-            df, schema, name, partition_col
-        )
+        `_base`: internal — a read-modify-write caller passes the
+        version count it captured BEFORE reading the table, so a commit
+        that lands between its read and this commit is conflict-checked
+        rather than silently based on stale state (an interleaved
+        commit with a version BELOW the commit-time base escapes the
+        `[base:]` conflict scan)."""
         base, data_dir = self._next_data_dir(schema, name)
         if _base is not None:
             base = _base
@@ -1440,8 +1446,8 @@ class Lakehouse:
 
         Only partitions present in `updates` are read back and
         rewritten — surviving rows via one left-anti join on the key,
-        unioned with the updates — then committed through the normal
-        partition-overwrite path, so a merge is idempotent, versioned,
+        unioned with the updates — then committed as one partition
+        overwrite, so a merge is idempotent, versioned,
         time-travelable, and CDC-visible (`read_changes` shows exactly
         the delete+insert pairs of truly changed rows; rewritten-but-
         identical rows cancel out of the diff).
@@ -1474,76 +1480,12 @@ class Lakehouse:
         lives, so the cross-partition hazard doesn't exist).  Readers
         pay the DV anti-join until `compact()` materializes.
         """
-        keys = [key] if isinstance(key, str) else list(key)
-        dup = (
-            updates.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .limit(5)
-            .collect()
+        base, data_dir = self._next_data_dir(schema, name)
+        entry = self._stage_merge(
+            spark, schema, name, data_dir, updates, key, partition_col,
+            mode=mode, validate_cross_partition=validate_cross_partition,
         )
-        if dup:
-            raise ValueError(
-                f"merge_into {schema}.{name}: updates contain duplicate "
-                f"keys {[tuple(r[k] for k in keys) for r in dup]} — "
-                "one source row per key required"
-            )
-        if mode == "merge_on_read":
-            return self._merge_into_mor(spark, schema, name, updates, keys)
-        if mode != "copy_on_write":
-            raise ValueError(
-                f"merge_into: unknown mode {mode!r} "
-                "(copy_on_write | merge_on_read)"
-            )
-        updates, partition_col = self._resolve_partitioning(
-            updates, schema, name, partition_col
-        )
-        # optimistic-concurrency base, captured BEFORE any read of
-        # table state: every commit that lands after what this merge
-        # reads must fall in the conflict scan's [base:] range
-        base = len(self.snapshots(schema, name))
-        nt = self.null_token(schema, name)
-        affected = [
-            _token_of(r[0], nt)
-            for r in updates.select(partition_col).distinct().collect()
-        ]
-        if validate_cross_partition:
-            strays = (
-                self._ensure_partition_col(
-                    self.read(spark, schema, name), schema, name,
-                    partition_col,
-                )
-                .filter(
-                    ~self._pvalue_match(
-                        F.col(partition_col), affected, nt
-                    )
-                )
-                .join(updates.select(*keys).distinct(), keys, "left_semi")
-                .select(*keys, partition_col)
-                .limit(5)
-                .collect()
-            )
-            if strays:
-                raise ValueError(
-                    f"merge_into {schema}.{name}: update keys already "
-                    f"exist outside the affected partitions: "
-                    f"{[tuple(r) for r in strays]} — a merge cannot "
-                    "move rows across partitions (delete from the "
-                    "source partition first)"
-                )
-        current = self._ensure_partition_col(
-            self.read(spark, schema, name), schema, name, partition_col
-        ).filter(self._pvalue_match(F.col(partition_col), affected, nt))
-        survivors = current.join(
-            updates.select(*keys).distinct(), keys, "left_anti"
-        )
-        self.overwrite_partitions(
-            # allowMissingColumns = Delta's MERGE schema evolution
-            # (autoMerge): updates may ADD columns — surviving rows
-            # surface NULL there, exactly like an evolving append
-            survivors.unionByName(updates, allowMissingColumns=True),
-            schema, name, partition_col, _base=base,
-        )
+        self._commit(schema, name, entry, base)
 
     def delete_where(
         self,
@@ -1559,8 +1501,8 @@ class Lakehouse:
         matching rows, keeping the non-matching rows (GDPR-erasure /
         retention shape).  Partitions with no match are not rewritten
         (their mapping is untouched, so CDC and time travel see no
-        change there); the rewrite commits through the versioned
-        partition-overwrite path like every other write.
+        change there); the rewrite commits as a versioned partition
+        overwrite like every other write.
 
         `condition` is a Column predicate.  At 100 TB the cost is one
         scan of the table to find affected partitions (prunable if the
@@ -1586,63 +1528,25 @@ class Lakehouse:
         `predicates` (the ``read_where`` triple list) may be passed
         INSTEAD of `condition`: the delete condition is derived from
         the triples (one source of truth — the rows deleted are exactly
-        the rows the triples select), and the merge-on-read
-        position-finding scan routes through `read_where`, opening only
-        the stats/bloom-surviving files.  The pruned path is what makes
-        a point erasure (GDPR delete of k ids) O(matching files), not
-        O(table scan), on a Bloom-indexed key.
+        the rows the triples select), and the scans route through
+        `read_where`, opening only the stats/bloom-surviving files.
+        On a hidden-partitioned table, `=`/`in` triples on the spec's
+        SOURCE column derive the affected partitions forward through
+        the transform with no discovery scan (`_affected_partitions`).
+        The pruned path is what makes a point erasure (GDPR delete of
+        k ids) O(matching files), not O(table scan), on a
+        Bloom-indexed key.
 
         Returns True iff a commit happened (False = no matching rows,
         table untouched, no new version) — callers tracking commit
         counts must branch on this rather than assume one version per
         call."""
-        if (condition is None) == (predicates is None):
-            raise ValueError(
-                "delete_where: pass exactly one of condition or "
-                "predicates"
-            )
-        if predicates is not None:
-            from .skipping import predicates_to_column
-
-            condition = predicates_to_column(predicates)
-        if mode == "merge_on_read":
-            return self._delete_where_dv(
-                spark, schema, name, condition, predicates
-            )
-        if mode != "copy_on_write":
-            raise ValueError(
-                f"delete_where: unknown mode {mode!r} "
-                "(copy_on_write | merge_on_read)"
-            )
-        # base BEFORE the read — see overwrite_partitions `_base`
-        base = len(self.snapshots(schema, name))
-        nt = self.null_token(schema, name)
-        current = self.read(spark, schema, name)
-        if partition_col is None:
-            current, partition_col = self._resolve_partitioning(
-                current, schema, name, None
-            )
-        else:
-            current = self._ensure_partition_col(
-                current, schema, name, partition_col
-            )
-        affected = [
-            _token_of(r[0], nt)
-            for r in current.filter(condition)
-            .select(partition_col)
-            .distinct()
-            .collect()
-        ]
-        if not affected:
-            return False
-        survivors = current.filter(
-            self._pvalue_match(F.col(partition_col), affected, nt)
-        ).filter(~F.coalesce(condition, F.lit(False)))
-        self.overwrite_partitions(
-            survivors, schema, name, partition_col, partitions=affected,
-            _base=base,
+        base, data_dir = self._next_data_dir(schema, name)
+        entry = self._stage_delete(
+            spark, schema, name, data_dir, condition, predicates,
+            partition_col, mode,
         )
-        return True
+        return entry is not None and self._commit(schema, name, entry, base)
 
     @staticmethod
     def _apply_set(df: DataFrame, condition, assignments: dict) -> DataFrame:
@@ -1712,103 +1616,241 @@ class Lakehouse:
 
         `predicates` (the ``read_where`` triple list) may be passed
         INSTEAD of `condition` — same contract as `delete_where`: the
-        update condition derives from the triples, and the
-        merge-on-read position-finding scan routes through the pruned
-        read, opening only stats/bloom-surviving files (a point UPDATE
-        of k ids on a Bloom-indexed key is O(matching files) scan).
+        update condition derives from the triples, and partition
+        discovery and the merge-on-read position-finding scan route
+        through the pruned read, opening only stats/bloom-surviving
+        files (a point UPDATE of k ids on a Bloom-indexed key is
+        O(matching files) scan).
 
         Returns True iff a commit happened (False = no matching rows,
         no new version), matching `delete_where`."""
+        base, data_dir = self._next_data_dir(schema, name)
+        entry = self._stage_update(
+            spark, schema, name, data_dir, condition, set, predicates,
+            partition_col, mode,
+        )
+        return entry is not None and self._commit(schema, name, entry, base)
+
+    # -- row-level staging, one method per operation ----------------------
+    # (module docstring).  Callers capture their conflict base BEFORE
+    # calling; None = no row matched, nothing to commit.
+
+    @staticmethod
+    def _check_mode(op: str, mode: str) -> None:
         if mode not in ("copy_on_write", "merge_on_read"):
             raise ValueError(
-                f"update_where: unknown mode {mode!r} "
+                f"{op}: unknown mode {mode!r} "
                 "(copy_on_write | merge_on_read)"
             )
-        if not set:
-            raise ValueError("update_where: empty SET")
+
+    @staticmethod
+    def _selector(op: str, condition, predicates):
+        """The row selector of a DELETE/UPDATE: exactly one of a
+        Column `condition` or `read_where` `predicates`, the latter
+        turned into the equivalent Column (one source of truth)."""
         if (condition is None) == (predicates is None):
             raise ValueError(
-                "update_where: pass exactly one of condition or "
-                "predicates"
+                f"{op}: pass exactly one of condition or predicates"
             )
-        if predicates is not None:
-            from .skipping import predicates_to_column
+        if predicates is None:
+            return condition
+        from .skipping import predicates_to_column
 
-            condition = predicates_to_column(predicates)
-        if mode == "merge_on_read":
-            return self._update_where_mor(
-                spark, schema, name, condition, set, predicates
-            )
-        # base BEFORE the read — see overwrite_partitions `_base`
-        base = len(self.snapshots(schema, name))
-        current = self.read(spark, schema, name)
-        unknown = sorted(k for k in set if k not in current.columns)
-        if unknown:
-            raise ValueError(
-                f"update_where {schema}.{name}: SET names unknown "
-                f"columns {unknown}"
-            )
-        spec = self.partition_spec(schema, name)
-        moved = spec.source if spec is not None else partition_col
-        if moved is not None and moved in set:
-            raise ValueError(
-                f"update_where {schema}.{name}: SET {moved} would "
-                "move rows across partitions under copy-on-write — "
-                'use mode="merge_on_read"'
-            )
-        if partition_col is None:
-            current, partition_col = self._resolve_partitioning(
-                current, schema, name, None
-            )
-        else:
-            current = self._ensure_partition_col(
-                current, schema, name, partition_col
-            )
-        nt = self.null_token(schema, name)
-        affected = [
-            _token_of(r[0], nt)
-            for r in current.filter(condition)
-            .select(partition_col)
-            .distinct()
-            .collect()
-        ]
-        if not affected:
-            return False
-        rewritten = self._apply_set(
-            current.filter(
-                self._pvalue_match(F.col(partition_col), affected, nt)
-            ),
-            condition,
-            set,
-        )
-        self.overwrite_partitions(
-            rewritten, schema, name, partition_col,
-            partitions=affected, _base=base,
-        )
-        return True
+        return predicates_to_column(predicates)
 
-    def _update_where_mor(
+    def _matched_positions(
         self, spark: SparkSession, schema: str, name: str,
-        condition, assignments: dict,
-        predicates: list[tuple] | None = None,
-    ) -> bool:
-        """Merge-on-read UPDATE: DV over the matched positions + the
-        updated row images appended, one atomic `update_mor` commit
-        (same log shape as MoR MERGE, so CDC/compaction/fsck handling
-        is shared).  With `predicates`, the positional scan routes
-        through the pruned `read_where`, which already applies the
-        same conjunction as its residual filter."""
-        path = self._table_dir(schema, name)
-        # base BEFORE the positional read (see _merge_into_mor)
-        base, data_dir = self._next_data_dir(schema, name)
+        condition, predicates: list[tuple] | None,
+    ) -> DataFrame:
+        """The rows `condition` selects, with their physical positions
+        (`__dv_file`, `__dv_pos`).  With `predicates` the scan is the
+        pruned `read_where`, which already applies the same
+        conjunction as its residual filter.  Reading with positions
+        excludes earlier deletion vectors, so a vector never names an
+        already-deleted row twice."""
         if predicates is not None:
-            current = self.read_where(
+            return self.read_where(
                 spark, schema, name, predicates, with_positions=True
             )
-        else:
-            current = self.read(
-                spark, schema, name, with_positions=True
+        # TRUE rows only (SQL three-valued logic)
+        return self.read(
+            spark, schema, name, with_positions=True
+        ).filter(condition)
+
+    @staticmethod
+    def _write_dv(matched: DataFrame, dv_dir: str) -> None:
+        """Write a deletion vector: `matched`'s (file path, row index)
+        positions as one small parquet file."""
+        matched.select(
+            F.col("__dv_file").alias("file_path"),
+            F.col("__dv_pos").alias("row_index"),
+        ).coalesce(1).write.mode("overwrite").parquet(dv_dir)
+
+    def _stage_mor(
+        self, schema: str, name: str, data_dir: str,
+        matched: DataFrame, rows: DataFrame,
+    ) -> dict:
+        """Merge-on-read MERGE/UPDATE: a deletion vector over
+        `matched`'s positions (`<data_dir>-dv`) plus `rows` as new data
+        files, both named by ONE `update_mor` entry — the atomic
+        point, exactly like every other commit."""
+        path = self._table_dir(schema, name)
+        self._enforce_constraints(rows, schema, name)
+        dv_dir = data_dir + "-dv"
+        self._write_dv(matched, dv_dir)
+        self._to_physical(rows, schema, name).write.mode(
+            "overwrite"
+        ).parquet(data_dir)
+        return self._attach_stats(
+            dict(
+                op="update_mor",
+                data_dir=os.path.relpath(data_dir, path),
+                dv_dir=os.path.relpath(dv_dir, path),
+            ),
+            data_dir,
+            schema,
+            name,
+        )
+
+    def _stage_merge(
+        self, spark: SparkSession, schema: str, name: str, data_dir: str,
+        updates: DataFrame, key: str | list[str],
+        partition_col: str | None,
+        mode: str = "copy_on_write",
+        validate_cross_partition: bool = False,
+        purge_condition=None,
+    ) -> dict:
+        """Stage a MERGE (see `merge_into`).  `purge_condition` is the
+        WHEN MATCHED DELETE leg (see `Transaction.merge_into`): current
+        rows where it is TRUE are dropped even when no update row
+        shares their key, and their partitions join the rewrite set."""
+        keys = [key] if isinstance(key, str) else list(key)
+        dup = (
+            updates.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("n") > 1)
+            .limit(5)
+            .collect()
+        )
+        if dup:
+            raise ValueError(
+                f"merge_into {schema}.{name}: updates contain duplicate "
+                f"keys {[tuple(r[k] for k in keys) for r in dup]} — "
+                "one source row per key required"
             )
+        self._check_mode("merge_into", mode)
+        update_keys = updates.select(*keys).distinct()
+        if mode == "merge_on_read":
+            current = self.read(spark, schema, name, with_positions=True)
+            return self._stage_mor(
+                schema, name, data_dir,
+                current.join(update_keys, keys, "left_semi"), updates,
+            )
+        updates, partition_col = self._resolve_partitioning(
+            updates, schema, name, partition_col
+        )
+        nt = self.null_token(schema, name)
+        affected = {
+            _token_of(r[0], nt)
+            for r in updates.select(partition_col).distinct().collect()
+        }
+        current = self._ensure_partition_col(
+            self.read(spark, schema, name), schema, name, partition_col
+        )
+        if validate_cross_partition:
+            strays = (
+                current.filter(
+                    ~self._pvalue_match(
+                        F.col(partition_col), sorted(affected), nt
+                    )
+                )
+                .join(update_keys, keys, "left_semi")
+                .select(*keys, partition_col)
+                .limit(5)
+                .collect()
+            )
+            if strays:
+                raise ValueError(
+                    f"merge_into {schema}.{name}: update keys already "
+                    f"exist outside the affected partitions: "
+                    f"{[tuple(r) for r in strays]} — a merge cannot "
+                    "move rows across partitions (delete from the "
+                    "source partition first)"
+                )
+        if purge_condition is not None:
+            affected |= {
+                _token_of(r[0], nt)
+                for r in current.filter(purge_condition)
+                .select(partition_col)
+                .distinct()
+                .collect()
+            }
+        survivors = current.filter(
+            self._pvalue_match(F.col(partition_col), sorted(affected), nt)
+        ).join(update_keys, keys, "left_anti")
+        if purge_condition is not None:
+            # SQL three-valued logic: only TRUE rows are purged
+            survivors = survivors.filter(
+                ~F.coalesce(purge_condition, F.lit(False))
+            )
+        return self._stage_overwrite_partitions(
+            # allowMissingColumns = Delta's MERGE schema evolution
+            # (autoMerge): updates may ADD columns — surviving rows
+            # surface NULL there, exactly like an evolving append
+            survivors.unionByName(updates, allowMissingColumns=True),
+            schema, name, partition_col, data_dir,
+            # purge can empty a partition entirely — list the rewrite
+            # set explicitly so the commit still records (and
+            # supersedes) partitions the staged write produced no
+            # directory for
+            partitions=sorted(affected)
+            if purge_condition is not None
+            else None,
+        )
+
+    def _stage_delete(
+        self, spark: SparkSession, schema: str, name: str, data_dir: str,
+        condition, predicates: list[tuple] | None,
+        partition_col: str | None, mode: str,
+    ) -> dict | None:
+        """Stage a DELETE (see `delete_where`); None = no row matched."""
+        condition = self._selector("delete_where", condition, predicates)
+        self._check_mode("delete_where", mode)
+        if mode == "copy_on_write":
+            keep = ~F.coalesce(condition, F.lit(False))  # 3-valued logic
+            return self._stage_rewrite(
+                spark, schema, name, data_dir,
+                self.read(spark, schema, name), condition, predicates,
+                partition_col, lambda rows: rows.filter(keep),
+            )
+        matched = self._matched_positions(
+            spark, schema, name, condition, predicates
+        )
+        if matched.limit(1).count() == 0:
+            return None  # no matches → no commit (CoW parity)
+        self._write_dv(matched, data_dir)
+        path = self._table_dir(schema, name)
+        return dict(op="delete_dv", data_dir=os.path.relpath(data_dir, path))
+
+    def _stage_update(
+        self, spark: SparkSession, schema: str, name: str, data_dir: str,
+        condition, assignments: dict | None,
+        predicates: list[tuple] | None,
+        partition_col: str | None, mode: str,
+    ) -> dict | None:
+        """Stage an UPDATE (see `update_where`); None = no row matched."""
+        self._check_mode("update_where", mode)
+        if not assignments:
+            raise ValueError("update_where: empty SET")
+        condition = self._selector("update_where", condition, predicates)
+        mor = mode == "merge_on_read"
+        current = (
+            self._matched_positions(
+                spark, schema, name, condition, predicates
+            )
+            if mor
+            else self.read(spark, schema, name)
+        )
         unknown = sorted(
             k for k in assignments
             if k not in current.columns or k.startswith("__dv_")
@@ -1818,128 +1860,182 @@ class Lakehouse:
                 f"update_where {schema}.{name}: SET names unknown "
                 f"columns {unknown}"
             )
-        matched = (
-            current
-            if predicates is not None
-            else current.filter(condition)
-        )
-        if matched.limit(1).count() == 0:
-            return False  # no matches → no commit (CoW parity)
-        updated = self._apply_set(
-            matched, F.lit(True), assignments
-        ).drop("__dv_file", "__dv_pos")
-        self._enforce_constraints(updated, schema, name)
-        dv_dir = data_dir + "-dv"
-        matched.select(
-            F.col("__dv_file").alias("file_path"),
-            F.col("__dv_pos").alias("row_index"),
-        ).coalesce(1).write.mode("overwrite").parquet(dv_dir)
-        self._to_physical(updated, schema, name).write.mode(
-            "overwrite"
-        ).parquet(data_dir)
-        self._commit(
-            schema, name,
-            self._attach_stats(
-                dict(
-                    op="update_mor",
-                    data_dir=os.path.relpath(data_dir, path),
-                    dv_dir=os.path.relpath(dv_dir, path),
-                ),
-                data_dir,
-                schema,
-                name,
-            ),
-            base,
-        )
-        return True
-
-    def _merge_into_mor(
-        self,
-        spark: SparkSession,
-        schema: str,
-        name: str,
-        updates: DataFrame,
-        keys: list[str],
-    ) -> None:
-        """Merge-on-read MERGE: stage (a) the updates as new data files
-        and (b) a deletion vector naming the matched rows' positions,
-        then commit both with one `update_mor` log line — the atomic
-        point, exactly like every other commit."""
-        path = self._table_dir(schema, name)
-        self._enforce_constraints(updates, schema, name)
-        # base BEFORE the positional read: the DV names row positions
-        # in the files of the state it read, so any commit after that
-        # state must conflict (see overwrite_partitions `_base`)
-        base, data_dir = self._next_data_dir(schema, name)
-        current = self.read(spark, schema, name, with_positions=True)
-        matches = current.join(
-            updates.select(*keys).distinct(), keys, "left_semi"
-        ).select(
-            F.col("__dv_file").alias("file_path"),
-            F.col("__dv_pos").alias("row_index"),
-        )
-        dv_dir = data_dir + "-dv"
-        matches.coalesce(1).write.mode("overwrite").parquet(dv_dir)
-        self._to_physical(updates, schema, name).write.mode(
-            "overwrite"
-        ).parquet(data_dir)
-        self._commit(
-            schema, name,
-            self._attach_stats(
-                dict(
-                    op="update_mor",
-                    data_dir=os.path.relpath(data_dir, path),
-                    dv_dir=os.path.relpath(dv_dir, path),
-                ),
-                data_dir,
-                schema,
-                name,
-            ),
-            base,
-        )
-
-    def _delete_where_dv(
-        self,
-        spark: SparkSession,
-        schema: str,
-        name: str,
-        condition,
-        predicates: list[tuple] | None = None,
-    ) -> bool:
-        """Merge-on-read delete: commit the matching rows' physical
-        positions as a deletion vector (one parquet write, no data
-        rewritten).  Reading with positions already excludes earlier
-        DVs, so vectors never name an already-deleted row twice.  With
-        `predicates`, the positional scan routes through `read_where`
-        (stats/bloom/partition pruning) — it already applies the same
-        conjunction as its residual filter, so no re-filter needed."""
-        path = self._table_dir(schema, name)
-        # base BEFORE the positional read (see _merge_into_mor)
-        base, data_dir = self._next_data_dir(schema, name)
-        if predicates is not None:
-            scanned = self.read_where(
-                spark, schema, name, predicates, with_positions=True
+        if mor:
+            if current.limit(1).count() == 0:
+                return None  # no matches → no commit (CoW parity)
+            updated = self._apply_set(
+                current, F.lit(True), assignments
+            ).drop(*self._POS_COLS)
+            return self._stage_mor(schema, name, data_dir, current, updated)
+        spec = self.partition_spec(schema, name)
+        moved = spec.source if spec is not None else partition_col
+        if moved is not None and moved in assignments:
+            raise ValueError(
+                f"update_where {schema}.{name}: SET {moved} would "
+                "move rows across partitions under copy-on-write — "
+                'use mode="merge_on_read"'
             )
-        else:
-            scanned = self.read(
-                spark, schema, name, with_positions=True
-            ).filter(condition)  # TRUE rows only (3-valued logic)
-        matches = scanned.select(
-            F.col("__dv_file").alias("file_path"),
-            F.col("__dv_pos").alias("row_index"),
+        return self._stage_rewrite(
+            spark, schema, name, data_dir, current, condition, predicates,
+            partition_col,
+            lambda rows: self._apply_set(rows, condition, assignments),
         )
-        if matches.limit(1).count() == 0:
-            return False  # no matches → no commit (CoW parity)
-        matches.coalesce(1).write.mode("overwrite").parquet(data_dir)
-        self._commit(
-            schema, name,
-            dict(
-                op="delete_dv",
-                data_dir=os.path.relpath(data_dir, path),
-            ),
-            base,
+
+    def _stage_rewrite(
+        self, spark: SparkSession, schema: str, name: str, data_dir: str,
+        current: DataFrame, condition, predicates: list[tuple] | None,
+        partition_col: str | None, rewrite,
+    ) -> dict | None:
+        """Copy-on-write DELETE/UPDATE: the partitions holding a
+        matching row are rewritten as `rewrite(their current rows)` and
+        superseded as a set — listed explicitly, so a partition the
+        rewrite empties is still superseded.  None = no row matched."""
+        current, partition_col = self._resolve_partitioning(
+            current, schema, name, partition_col
         )
-        return True
+        affected = self._affected_partitions(
+            spark, schema, name, current, partition_col, condition,
+            predicates,
+        )
+        if not affected:
+            return None
+        rows = current.filter(
+            self._pvalue_match(
+                F.col(partition_col), affected, self.null_token(schema, name)
+            )
+        )
+        return self._stage_overwrite_partitions(
+            rewrite(rows), schema, name, partition_col, data_dir,
+            partitions=affected,
+        )
+
+    def _affected_partitions(
+        self, spark: SparkSession, schema: str, name: str,
+        current: DataFrame, pcol: str, condition,
+        predicates: list[tuple] | None,
+    ) -> list[str]:
+        """Canonical tokens of the partitions holding a row `condition`
+        matches, cheapest discovery first: `=`/`in` predicates on a
+        hidden spec's SOURCE column derive them forward through the
+        transform (zero discovery scans — a point erasure on a
+        bucket-partitioned key at 100 TB); other predicates on a
+        hidden-partitioned table read them off the paths of the
+        `read_where`-surviving files; otherwise (or for rows in flat
+        additive files) one scan of `current`."""
+        spec = self.partition_spec(schema, name)
+        if (
+            predicates is not None
+            and spec is not None
+            and pcol == spec.hidden_col
+        ):
+            affected = None
+            if all(
+                p[0] == spec.source and p[1] in ("=", "==", "in")
+                for p in predicates
+            ):
+                affected = self._derive_affected_tokens(
+                    schema, name, spec, predicates
+                )
+                # the derived partitions may hold none of the values
+                # (value absent from the table): keep the rows-matched
+                # contract with ONE pruned existence probe
+                if affected and (
+                    self.read_where(spark, schema, name, predicates)
+                    .limit(1)
+                    .count()
+                    == 0
+                ):
+                    return []
+            if affected is None:
+                affected = self._probe_affected_tokens(
+                    spark, schema, name, predicates, pcol
+                )
+            if affected is not None:
+                return affected
+        nt = self.null_token(schema, name)
+        return [
+            _token_of(r[0], nt)
+            for r in current.filter(condition)
+            .select(pcol)
+            .distinct()
+            .collect()
+        ]
+
+    def _derive_affected_tokens(
+        self, schema: str, name: str, spec, predicates: list[tuple]
+    ) -> list[str] | None:
+        """Forward partition discovery: the transform of every
+        predicate value, intersected with the live partition values —
+        the mapped partitions PLUS any values sitting in additive
+        (append) dirs, read off their spec subdirectory names (an
+        appended row's partition may not be mapped yet).  None = an
+        additive dir WITHOUT spec subdirs hides its values; the caller
+        falls back rather than risk missing a partition."""
+        cand: set[str] = set()
+        for _, op, val in predicates:
+            cand.update(
+                spec.value_of(v) for v in (val if op == "in" else (val,))
+            )
+        part_map, extra, _dvs = self._manifest(schema, name)
+        live = set(part_map)
+        nt = self.null_token(schema, name)
+        for d in extra:
+            subs = _raw_tokens(d, spec.hidden_col)
+            if subs:
+                # CANONICAL tokens (escaped / NULL-sentinel dir names
+                # must intersect with value_of's canonical output, not
+                # their raw spelling)
+                live.update(_canon_token(t, nt) for t in subs)
+            elif _count_data_files(d) > 0:
+                return None
+        return sorted(cand & live)
+
+    def _probe_affected_tokens(
+        self,
+        spark: SparkSession,
+        schema: str,
+        name: str,
+        predicates: list[tuple],
+        pcol: str,
+    ) -> list[str] | None:
+        """Pruned partition discovery: instead of scanning every
+        partition for matches, read only the stats/Bloom-surviving
+        files (`read_where`) and take the touched partition TOKENS from
+        the matching rows' file paths — the same `<pcol>=<token>`
+        segments the forward derivation reads off directory names, so
+        the tokens feed `_pvalue_match` unchanged.  With a Bloom index
+        on the predicate column this is O(matching files), not
+        O(table).
+
+        Returns [] when no rows match anywhere (caller commits
+        nothing), or None when any matching row sits in a file whose
+        path carries no `<pcol>=` segment (flat additive file — its
+        partition value can't be attributed from the path; caller
+        falls back to scan discovery)."""
+        from urllib.parse import unquote
+
+        probe = self.read_where(
+            spark, schema, name, predicates, with_positions=True
+        )
+        pfx = f"{os.sep}{pcol}="
+        nt = self.null_token(schema, name)
+        toks: set[str] = set()
+        for r in probe.select("__dv_file").distinct().collect():
+            f = r[0]
+            i = f.rfind(pfx)
+            if i < 0:
+                return None
+            seg = f[i + len(pfx):].split(os.sep, 1)[0]
+            # two encoding layers peel off here: `__dv_file` comes from
+            # `_metadata.file_path`, a URI (the on-disk '%' of a
+            # hive-escaped name arrives as '%25'), so unquote once to
+            # the on-disk directory name, then _canon_token undoes the
+            # hive escaping / NULL sentinel to the catalog's canonical
+            # token — the form _pvalue_match and the commit log speak.
+            # Anything less and a NULL/escaped partition records a
+            # token no reader matches, silently skipping the partition.
+            toks.add(_canon_token(unquote(seg), nt))
+        return sorted(toks)
 
     def overwrite(
         self,
@@ -1981,6 +2077,9 @@ class Lakehouse:
                 txn.overwrite_partitions(fact, "silver", "fact", "d")
                 txn.append(audit_row, "silver", "data_quality_log")
 
+        Each staged op runs the same `_stage_*` method as its
+        single-table twin, so the two agree on semantics; only the
+        commit differs.  Single-table writes never touch the journal.
         All data files are written inside the block (the expensive,
         restartable part); the COMMIT POINT is one appended line in the
         lakehouse-level journal (`_txns.jsonl`) naming every (table,
@@ -2001,33 +2100,32 @@ class Lakehouse:
     def _journal_path(self) -> str:
         return os.path.join(self.root, TXN_LOG)
 
-    def _journal_entries(self) -> list[dict]:
-        p = self._journal_path()
-        if not os.path.exists(p):
-            return []
-        with open(p) as f:
-            return [json.loads(line) for line in f if line.strip()]
-
     def _heal_from_journal(self, schema: str, name: str) -> None:
         """Append any table-log lines a crashed committer never wrote.
         Every read/write path calls snapshots() (and thus this) before
         assigning new versions, so healed lines keep log order."""
-        journal = self._journal_entries()
-        if not journal:
-            return
+        journal = _read_jsonl(self._journal_path())
+        if journal:
+            self._log_txn_lines(schema, name, journal)
+
+    def _log_txn_lines(
+        self, schema: str, name: str, journal: list[dict]
+    ) -> None:
+        """Append this table's entry of every journal line its log does
+        not carry yet (by `txn_id`) — a transaction's post-commit
+        append and journal healing alike.  Checked under the table
+        lock, so no two appenders write the same line twice."""
         path = self._table_dir(schema, name)
-        # check-and-append under the table lock so two concurrent
-        # healers can't both append the same missing line
         with self._table_lock(path):
-            raw = self._raw_snapshots(schema, name)
-            seen = {e.get("txn_id") for e in raw if e.get("txn_id")}
+            log = self._raw_snapshots(schema, name)
+            seen = {e.get("txn_id") for e in log if e.get("txn_id")}
             for j in journal:
                 if j["txn_id"] in seen:
                     continue
                 for t in j["tables"]:
                     if t["schema"] == schema and t["name"] == name:
                         self._append_log_line(
-                            path, txn_id=j["txn_id"], **t["entry"]
+                            path, log, txn_id=j["txn_id"], **t["entry"]
                         )
 
     def compact(
@@ -2235,24 +2333,13 @@ class Lakehouse:
                 _token_of(r[0], self.null_token(schema, name))
                 for r in df.select(partition_col).distinct().collect()
             )
-            self._commit(
-                schema, name,
-                self._attach_stats(
-                    dict(
-                        op=(
-                            "overwrite_partitions"
-                            if scoped
-                            else "compact_partitioned"
-                        ),
-                        partitions=parts, partition_col=partition_col,
-                        data_dir=os.path.relpath(data_dir, path),
-                        files_before=before,
-                    ),
-                    data_dir,
-                    schema,
-                    name,
+            entry = dict(
+                op=(
+                    "overwrite_partitions"
+                    if scoped
+                    else "compact_partitioned"
                 ),
-                version,
+                partitions=parts, partition_col=partition_col,
             )
         else:
             if zorder_by:
@@ -2270,20 +2357,21 @@ class Lakehouse:
                 if sort_by:
                     compacted = compacted.sortWithinPartitions(*sort_by)
             compacted.write.mode("overwrite").parquet(data_dir)
-            self._commit(
-                schema, name,
-                self._attach_stats(
-                    dict(
-                        op="compact",
-                        data_dir=os.path.relpath(data_dir, path),
-                        files_before=before,
-                    ),
-                    data_dir,
-                    schema,
-                    name,
+            entry = dict(op="compact")
+        self._commit(
+            schema, name,
+            self._attach_stats(
+                dict(
+                    entry,
+                    data_dir=os.path.relpath(data_dir, path),
+                    files_before=before,
                 ),
-                version,
-            )
+                data_dir,
+                schema,
+                name,
+            ),
+            version,
+        )
         if vacuum:
             if vacuum_grace_seconds is None:
                 self.vacuum(schema, name, keep_version=version)
@@ -3886,11 +3974,9 @@ class Lakehouse:
         )
 
     def _raw_snapshots(self, schema: str, name: str) -> list[dict]:
-        log = os.path.join(self._table_dir(schema, name), SNAPSHOT_LOG)
-        if not os.path.exists(log):
-            return []
-        with open(log) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        return _read_jsonl(
+            os.path.join(self._table_dir(schema, name), SNAPSHOT_LOG)
+        )
 
     def snapshots(self, schema: str, name: str) -> list[dict]:
         """Commit history for a table (DESCRIBE HISTORY analog), after
@@ -3900,111 +3986,110 @@ class Lakehouse:
 
     def _log_snapshot(self, path: str, op: str, **extra) -> None:
         """Serialized version-assign + append (no conflict check — used
-        by paths that are conflict-free by construction, e.g. journal
-        healing, which replays already-committed transactions)."""
+        by paths that are conflict-free by construction, e.g. the
+        change-feed and materialized-view watermark lines, which
+        write no data)."""
         with self._table_lock(path):
-            self._append_log_line(path, op, **extra)
+            self._append_log_line(
+                path, _read_jsonl(os.path.join(path, SNAPSHOT_LOG)), op,
+                **extra,
+            )
 
-    def _append_log_line(self, path: str, op: str, **extra) -> None:
-        """Assign the next version number and append one log line.
-        Caller must hold the table lock (or otherwise be the only
-        writer); the append itself is the commit point."""
+    def _append_log_line(
+        self, path: str, log: list[dict], op: str, **extra
+    ) -> None:
+        """Append one log line numbered `len(log)`, where `log` is the
+        table log the caller parsed under the table lock it still holds
+        (or as the only writer); the new entry is appended to `log`
+        too, so a caller can append several lines off one parse.  The
+        file append itself is the commit point."""
         os.makedirs(path, exist_ok=True)
-        log = os.path.join(path, SNAPSHOT_LOG)
-        version = len(
-            self._raw_snapshots(*_schema_name_from(path, self.root))
-        )
         entry = {
-            "version": version,
+            "version": len(log),
             "timestamp": time.strftime("%Y-%m-%dT%H:%M:%S"),
             "operation": op,
             **extra,
         }
-        with open(log, "a") as f:
-            f.write(json.dumps(entry) + "\n")
+        line = json.dumps(entry)
+        with open(os.path.join(path, SNAPSHOT_LOG), "a") as f:
+            f.write(line + "\n")
+        log.append(json.loads(line))  # exactly what a re-parse yields
         if (
             self.checkpoint_interval
-            and (version + 1) % self.checkpoint_interval == 0
+            and len(log) % self.checkpoint_interval == 0
         ):
-            self._write_checkpoint(
-                path,
-                self._raw_snapshots(*_schema_name_from(path, self.root)),
-            )
-
-
-def _schema_name_from(path: str, root: str) -> tuple[str, str]:
-    rel = os.path.relpath(path, root)
-    schema, name = rel.split(os.sep)[:2]
-    return schema, name
+            self._write_checkpoint(path, log)
 
 
 class Transaction:
     """Staged multi-table write set; see `Lakehouse.transaction()`.
 
-    Data directories are written eagerly (named `_data/t<txn_id>`, so
-    concurrent version numbering never collides); log visibility is
-    deferred to `_commit`, whose FIRST action — one journal-line append
-    — is the atomic commit point for every table at once.
+    The second commit front-end over the SAME staging methods the
+    single-table `Lakehouse` writes use (`_stage_overwrite_partitions`,
+    `_stage_full_write`, `_stage_merge`, `_stage_delete`): each op
+    records the table's conflict base, stages into `_data/t<txn_id>`
+    (so concurrent version numbering never collides) and keeps the
+    returned log entry.  Log visibility is deferred to `_commit`,
+    whose FIRST action — one journal-line append — is the atomic
+    commit point for every table at once.
     """
 
     def __init__(self, lake: Lakehouse):
         self.lake = lake
         self.txn_id = f"{time.time_ns():x}-{os.getpid():x}"
         self.pending: list[tuple[str, str, dict]] = []
-        # per-table snapshot version captured when the txn FIRST reads
-        # that table (top of each staging method, before any scan) —
-        # the commit point replays every line that landed after it
-        # through `_commits_conflict`, same optimistic-concurrency
-        # matrix as the direct-path `_commit`.  Without this, an
-        # interleaved compact/overwrite silently invalidated a staged
-        # MoR deletion vector's (file_path, row_index) keys and
-        # silently lost staged CoW rewrites (r13, ADVICE).
+        # per-table conflict base, taken before the staging method
+        # reads the table (see `_commit_journal`)
         self.base_versions: dict[tuple[str, str], int] = {}
 
-    def _record_base(self, schema: str, name: str) -> None:
-        self.base_versions.setdefault(
-            (schema, name), len(self.lake.snapshots(schema, name))
-        )
-
-    # -- staged write ops (same signatures as Lakehouse's) -----------------
-
-    def _data_dir(self, schema: str, name: str) -> str:
-        self.lake._ensure_format(schema, name)
-        return os.path.join(
-            self.lake._table_dir(schema, name), "_data", f"t{self.txn_id}"
-        )
-
-    def _stage(self, schema: str, name: str, entry: dict) -> None:
+    def _begin(self, schema: str, name: str) -> str:
+        """Open this txn's one write to `schema.name`: record the
+        conflict base (before any read) and return the staging dir."""
         if any(s == schema and n == name for s, n, _ in self.pending):
             raise ValueError(
                 f"transaction already writes {schema}.{name} "
                 "(one write per table per txn)"
             )
+        base, data_dir = self.lake._next_data_dir(
+            schema, name, f"t{self.txn_id}"
+        )
+        self.base_versions.setdefault((schema, name), base)
+        return data_dir
+
+    def _stage(self, schema: str, name: str, entry: dict | None) -> bool:
+        if entry is None:
+            return False  # no row matched: nothing staged for the table
         self.pending.append((schema, name, entry))
+        return True
+
+    # -- staged write ops (same signatures as Lakehouse's) -----------------
 
     def overwrite_partitions(
         self, df: DataFrame, schema: str, name: str,
         partition_col: str | None = None,
     ) -> None:
-        self._record_base(schema, name)
-        df, partition_col = self.lake._resolve_partitioning(
-            df, schema, name, partition_col
-        )
+        data_dir = self._begin(schema, name)
         self._stage(
             schema, name,
             self.lake._stage_overwrite_partitions(
-                df, schema, name, partition_col,
-                self._data_dir(schema, name),
+                df, schema, name, partition_col, data_dir
             ),
         )
 
     def overwrite(self, df: DataFrame, schema: str, name: str) -> None:
-        self._record_base(schema, name)
+        data_dir = self._begin(schema, name)
         self._stage(
             schema, name,
             self.lake._stage_full_write(
-                df, schema, name, "overwrite", self._data_dir(schema, name)
+                df, schema, name, "overwrite", data_dir
             ),
+        )
+
+    def append(self, df: DataFrame, schema: str, name: str) -> None:
+        data_dir = self._begin(schema, name)
+        self._stage(
+            schema, name,
+            self.lake._stage_full_write(df, schema, name, "append", data_dir),
         )
 
     def merge_into(
@@ -4017,12 +4102,11 @@ class Transaction:
         partition_col: str | None = None,
         purge_condition=None,
     ) -> None:
-        """Stage a copy-on-write MERGE (same semantics as
-        `Lakehouse.merge_into`) inside the transaction: the merged
-        partitions are computed against the CURRENT table state at
-        stage time and become visible only at the journal commit —
-        so several tables' merges (e.g. an index's postings + doc
-        lengths + stats) land atomically.
+        """Stage a copy-on-write MERGE (`Lakehouse.merge_into`) inside
+        the transaction: the merged partitions are computed against the
+        CURRENT table state at stage time and become visible only at
+        the journal commit — so several tables' merges (e.g. an index's
+        postings + doc lengths + stats) land atomically.
 
         `purge_condition` is the WHEN MATCHED DELETE leg (Delta MERGE
         analog): current rows where the predicate is TRUE are dropped
@@ -4032,66 +4116,12 @@ class Transaction:
         remove rows for terms the new text no longer contains, which
         live under keys (and partitions) the update frame never
         mentions."""
-        self._record_base(schema, name)
-        keys = [key] if isinstance(key, str) else list(key)
-        dup = (
-            updates.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .limit(5)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                f"txn merge_into {schema}.{name}: duplicate keys "
-                f"{[tuple(r[k] for k in keys) for r in dup]}"
-            )
-        lake = self.lake
-        updates, partition_col = lake._resolve_partitioning(
-            updates, schema, name, partition_col
-        )
-        nt = lake.null_token(schema, name)
-        affected = {
-            _token_of(r[0], nt)
-            for r in updates.select(partition_col).distinct().collect()
-        }
-        current_full = lake._ensure_partition_col(
-            lake.read(spark, schema, name), schema, name, partition_col
-        )
-        if purge_condition is not None:
-            affected |= {
-                _token_of(r[0], nt)
-                for r in current_full.filter(purge_condition)
-                .select(partition_col)
-                .distinct()
-                .collect()
-            }
-        current = current_full.filter(
-            lake._pvalue_match(
-                F.col(partition_col), sorted(affected), nt
-            )
-        )
-        survivors = current.join(
-            updates.select(*keys).distinct(), keys, "left_anti"
-        )
-        if purge_condition is not None:
-            # SQL three-valued logic: only TRUE rows are purged
-            survivors = survivors.filter(
-                ~F.coalesce(purge_condition, F.lit(False))
-            )
+        data_dir = self._begin(schema, name)
         self._stage(
             schema, name,
-            lake._stage_overwrite_partitions(
-                survivors.unionByName(updates, allowMissingColumns=True),
-                schema, name, partition_col,
-                self._data_dir(schema, name),
-                # purge can empty a partition entirely — list the
-                # rewrite set explicitly so the commit still records
-                # (and supersedes) partitions the staged write
-                # produced no directory for
-                partitions=sorted(affected)
-                if purge_condition is not None
-                else None,
+            self.lake._stage_merge(
+                spark, schema, name, data_dir, updates, key, partition_col,
+                purge_condition=purge_condition,
             ),
         )
 
@@ -4105,249 +4135,25 @@ class Transaction:
         predicates: list[tuple] | None = None,
         mode: str = "copy_on_write",
     ) -> bool:
-        """Stage a row-level DELETE (same semantics as
-        `Lakehouse.delete_where`) inside the transaction — so a
-        multi-table erasure (an index's postings + doc lengths + stats
-        refresh) lands at one journal line and a reader can never
-        observe postings for a document whose length row is already
-        gone.  Returns True iff rows matched (False = nothing staged
-        for this table).
-
-        With `predicates` instead of `condition` (one source of truth,
-        like `Lakehouse.delete_where`), and when every triple is an
-        `=`/`in` on the table's hidden-partition SOURCE column, the
-        affected partitions are derived FORWARD through the transform
-        (`PartitionSpec.value_of`) — the discovery step costs zero
-        table scans, the shape a point erasure on a
-        bucket-partitioned key needs at 100 TB.  Other predicates fall
-        back to the scan-based discovery.
-
-        ``mode="merge_on_read"`` stages the Delta deletion-vector
-        shape instead (`Lakehouse.delete_where` MoR twin): ONE small
-        parquet of the matching rows' physical positions, no data
-        rewritten — write cost O(deleted rows) where copy-on-write
-        rewrites every affected partition wholly (a bucket-partitioned
-        postings table can see a single document's erasure touch most
-        buckets).  With `predicates`, the position-finding scan routes
-        through `read_where` (stats/Bloom pruning).  Readers anti-join
-        the vector out until `compact()` materializes; the journal
-        line stays the atomic point for every staged table at once."""
-        lake = self.lake
-        self._record_base(schema, name)
-        if (condition is None) == (predicates is None):
-            raise ValueError(
-                "txn delete_where: pass exactly one of condition or "
-                "predicates"
-            )
-        if mode == "merge_on_read":
-            if predicates is not None:
-                scanned = lake.read_where(
-                    spark, schema, name, predicates,
-                    with_positions=True,
-                )
-            else:
-                # TRUE rows only (SQL three-valued logic)
-                scanned = lake.read(
-                    spark, schema, name, with_positions=True
-                ).filter(condition)
-            matches = scanned.select(
-                F.col("__dv_file").alias("file_path"),
-                F.col("__dv_pos").alias("row_index"),
-            )
-            if matches.limit(1).count() == 0:
-                return False  # no matches → nothing staged (CoW parity)
-            data_dir = self._data_dir(schema, name)
-            matches.coalesce(1).write.mode("overwrite").parquet(data_dir)
-            self._stage(
-                schema, name,
-                dict(
-                    op="delete_dv",
-                    data_dir=os.path.relpath(
-                        data_dir, lake._table_dir(schema, name)
-                    ),
-                ),
-            )
-            return True
-        if mode != "copy_on_write":
-            raise ValueError(
-                f"txn delete_where: unknown mode {mode!r} "
-                "(copy_on_write | merge_on_read)"
-            )
-        if predicates is not None:
-            from .skipping import predicates_to_column
-
-            condition = predicates_to_column(predicates)
-        affected: list[str] | None = None
-        spec = lake.partition_spec(schema, name)
-        if (
-            predicates is not None
-            and partition_col is None
-            and spec is not None
-            and all(
-                p[0] == spec.source and p[1] in ("=", "==", "in")
-                for p in predicates
-            )
-        ):
-            cand: set[str] = set()
-            for _, op, val in predicates:
-                vals = val if op == "in" else (val,)
-                cand.update(spec.value_of(v) for v in vals)
-            # live partition values: the mapped partitions PLUS any
-            # values sitting in additive (append) dirs, read off their
-            # spec subdirectory names — an appended row's bucket may
-            # not be in part_map yet.  An additive dir WITHOUT spec
-            # subdirs hides its values: fall back to scan discovery
-            # rather than risk missing a bucket.
-            part_map, extra, _dvs = lake._manifest(schema, name)
-            live = set(part_map)
-            pfx = f"{spec.hidden_col}="
-            nt = lake.null_token(schema, name)
-            opaque_additive = False
-            for d in extra:
-                subs = [
-                    s for s in (
-                        os.listdir(d) if os.path.isdir(d) else ()
-                    )
-                    if s.startswith(pfx)
-                ]
-                if subs:
-                    # CANONICAL tokens (escaped / NULL-sentinel dir
-                    # names must intersect with value_of's canonical
-                    # output, not their raw spelling)
-                    live.update(
-                        _canon_token(s[len(pfx):], nt) for s in subs
-                    )
-                elif _count_data_files(d) > 0:
-                    opaque_additive = True
-            if not opaque_additive:
-                affected = sorted(cand & live)
-                if not affected:
-                    return False
-                # the derived buckets may hold none of the ids (id
-                # absent from the table): keep the rows-matched
-                # contract with ONE pruned existence probe.  Only on
-                # this branch — the scan-discovery fallback below
-                # answers the same question itself
-                if (
-                    lake.read_where(spark, schema, name, predicates)
-                    .limit(1)
-                    .count()
-                    == 0
-                ):
-                    return False
-        current = lake.read(spark, schema, name)
-        if partition_col is None:
-            current, partition_col = lake._resolve_partitioning(
-                current, schema, name, None
-            )
-        else:
-            current = lake._ensure_partition_col(
-                current, schema, name, partition_col
-            )
-        if (
-            affected is None
-            and predicates is not None
-            and spec is not None
-            and partition_col == spec.hidden_col
-        ):
-            # predicates on a NON-source column of a hidden-partitioned
-            # table (e.g. erase-by-doc_id from a bucket(term) postings
-            # table): forward derivation can't apply, but the discovery
-            # scan can still be stats/Bloom-pruned — open only the
-            # read_where-surviving files and read the touched bucket
-            # tokens off their paths.  None = a matching row lives in a
-            # flat additive file (no token in its path) → fall back to
-            # the full scan below
-            affected = self._probe_affected_tokens(
-                spark, schema, name, predicates, partition_col
-            )
-            if affected is not None and not affected:
-                return False
-        if affected is None:
-            affected = [
-                _token_of(r[0], lake.null_token(schema, name))
-                for r in current.filter(condition)
-                .select(partition_col)
-                .distinct()
-                .collect()
-            ]
-        if not affected:
-            return False
-        survivors = current.filter(
-            lake._pvalue_match(
-                F.col(partition_col), affected,
-                lake.null_token(schema, name),
-            )
-        ).filter(~F.coalesce(condition, F.lit(False)))
-        self._stage(
+        """Stage a row-level DELETE (`Lakehouse.delete_where`, either
+        mode) inside the transaction — so a multi-table erasure (an
+        index's postings + doc lengths + stats refresh) lands at one
+        journal line and a reader can never observe postings for a
+        document whose length row is already gone.  Returns True iff
+        rows matched (False = nothing staged for this table)."""
+        data_dir = self._begin(schema, name)
+        return self._stage(
             schema, name,
-            lake._stage_overwrite_partitions(
-                survivors, schema, name, partition_col,
-                self._data_dir(schema, name), partitions=affected,
-            ),
-        )
-        return True
-
-    def _probe_affected_tokens(
-        self,
-        spark: SparkSession,
-        schema: str,
-        name: str,
-        predicates: list[tuple],
-        pcol: str,
-    ) -> list[str] | None:
-        """Pruned partition discovery for a staged DELETE: instead of
-        scanning every partition for matches, read only the
-        stats/Bloom-surviving files (`read_where`) and take the
-        touched partition TOKENS from the matching rows' file paths —
-        the same `<pcol>=<token>` segments the forward-derivation
-        branch reads off directory names, so the tokens feed
-        `_pvalue_match` unchanged.  With a Bloom index on the
-        predicate column this is O(matching files), not O(table).
-
-        Returns [] when no rows match anywhere (caller commits
-        nothing), or None when any matching row sits in a file whose
-        path carries no `<pcol>=` segment (flat additive file — its
-        partition value can't be attributed from the path; caller
-        falls back to scan discovery)."""
-        from urllib.parse import unquote
-
-        probe = self.lake.read_where(
-            spark, schema, name, predicates, with_positions=True
-        )
-        pfx = f"{os.sep}{pcol}="
-        nt = self.lake.null_token(schema, name)
-        toks: set[str] = set()
-        for r in probe.select("__dv_file").distinct().collect():
-            f = r[0]
-            i = f.rfind(pfx)
-            if i < 0:
-                return None
-            seg = f[i + len(pfx):].split(os.sep, 1)[0]
-            # two encoding layers peel off here: `__dv_file` comes from
-            # `_metadata.file_path`, a URI (the on-disk '%' of a
-            # hive-escaped name arrives as '%25'), so unquote once to
-            # the on-disk directory name, then _canon_token undoes the
-            # hive escaping / NULL sentinel to the catalog's canonical
-            # token — the form _pvalue_match and the commit log speak.
-            # Anything less and a NULL/escaped partition records a
-            # token no reader matches, silently skipping the partition.
-            toks.add(_canon_token(unquote(seg), nt))
-        return sorted(toks)
-
-    def append(self, df: DataFrame, schema: str, name: str) -> None:
-        self._record_base(schema, name)
-        self._stage(
-            schema, name,
-            self.lake._stage_full_write(
-                df, schema, name, "append", self._data_dir(schema, name)
+            self.lake._stage_delete(
+                spark, schema, name, data_dir, condition, predicates,
+                partition_col, mode,
             ),
         )
 
     # -- commit protocol ---------------------------------------------------
 
-    def _commit_journal(self) -> None:
-        """THE commit point: one appended journal line."""
+    def _commit_journal(self) -> dict:
+        """THE commit point: one appended journal line (returned)."""
         line = {
             "txn_id": self.txn_id,
             "timestamp": time.strftime("%Y-%m-%dT%H:%M:%S"),
@@ -4359,52 +4165,32 @@ class Transaction:
         # journal appends serialize on a lakehouse-level lock so
         # concurrent transactions each land as one intact line
         with self.lake._table_lock(self.lake.root):
-            # optimistic-concurrency scan (r13): every log line that
-            # landed after this txn's first read of each table runs
-            # through the SAME conflict matrix as direct-path commits.
             # Raising here (before the journal append) aborts the
-            # whole txn atomically — nothing became visible.  This is
-            # what makes a staged MoR deletion vector safe: a
-            # compact/overwrite landing between stage and commit would
-            # otherwise leave DV (file_path, row_index) keys matching
-            # nothing, silently resurrecting the deleted rows.
+            # whole txn atomically — nothing became visible.
             for schema, name, entry in self.pending:
-                base = self.base_versions.get((schema, name))
-                if base is None:
-                    continue
+                base = self.base_versions[(schema, name)]
                 # snapshots() (not _raw_snapshots): heal first, so a
                 # concurrent txn that crashed after ITS journal append
                 # still counts as landed.  Healing takes per-table
                 # locks — distinct flock files from the root journal
                 # lock held here, so no self-deadlock.
-                for other in self.lake.snapshots(schema, name)[base:]:
-                    if _commits_conflict(entry, other):
-                        raise ConcurrentWriteError(
-                            f"{schema}.{name}: txn {self.txn_id} "
-                            f"staged {entry['op']!r} against version "
-                            f"{base}, but interleaved version "
-                            f"{other['version']} "
-                            f"({other['operation']!r}) landed before "
-                            "the journal commit; re-stage and retry"
-                        )
+                _check_conflicts(
+                    entry, self.lake.snapshots(schema, name)[base:], base,
+                    f"{schema}.{name}: txn {self.txn_id} staged",
+                    "re-stage and retry",
+                )
             with open(self.lake._journal_path(), "a") as f:
                 f.write(json.dumps(line) + "\n")
-
-    def _commit_table_logs(self) -> None:
-        """Post-commit convenience appends; a crash here is repaired by
-        `snapshots()`'s journal healing."""
-        for schema, name, entry in self.pending:
-            self.lake._log_snapshot(
-                self.lake._table_dir(schema, name),
-                txn_id=self.txn_id,
-                **entry,
-            )
+        return line
 
     def _commit(self) -> None:
         if not self.pending:
             return
-        self._commit_journal()
-        self._commit_table_logs()
+        line = self._commit_journal()
+        # post-commit convenience appends; a crash here is repaired by
+        # `snapshots()`'s journal healing
+        for schema, name, _entry in self.pending:
+            self.lake._log_txn_lines(schema, name, [line])
 
     def __enter__(self) -> "Transaction":
         return self
